@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Round-13 A/B harness: interleaved min-of-N of current-vs-candidate
-forms (same session, same discipline as r12's minhash_variants.py).
+forms (same session).
 
 Usage:
     python scripts/ab_r13.py EXP [--reps=N] [--verify] [--sf-dir=DIR]

@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Capture .explain("formatted") output for named registry queries.
 
-Usage: python scripts/capture_plans_r12.py SUFFIX [name ...]
-Writes plans/r12/<query>_<SUFFIX>.txt. Default: all headline queries.
+Usage: python scripts/capture_plans.py DIR SUFFIX [name ...]
+Writes plans/<DIR>/<query>_<SUFFIX>.txt. Default: all headline queries.
 Plan-only (no execution) at sf0.1 so the scan stats match the bench dir.
 """
 from __future__ import annotations
@@ -17,13 +17,13 @@ from small_etl_spark.session import get_spark
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:] or [n for n, s in REGISTRY.items() if s.headline]
+    out_sub, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or [n for n, s in REGISTRY.items() if s.headline]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("plan-capture")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r12",
+        "plans", out_sub,
     )
     os.makedirs(out_dir, exist_ok=True)
     for name in names:

@@ -2,10 +2,11 @@
 ~``chunk_tokens``-token windows with ``overlap`` tokens of context
 carried between consecutive chunks.
 
-Pure array expressions — tokens → strided windows via ``sequence`` +
-``slice`` → ``posexplode`` — one map-only pass, rows out ≈ tokens/step
-per doc. No Python, no shuffle; at 100 TB chunking is scan-bound and
-embarrassingly parallel, exactly as it should be.
+Pure array expressions — tokens → strided windows
+(``textstats.ngram_windows_sql``) → ``posexplode`` — one map-only
+pass, rows out ≈ tokens/step per doc. No Python, no shuffle; at
+100 TB chunking is scan-bound and embarrassingly parallel, exactly as
+it should be.
 
 Note the token definition is the word-regex tokenizer shared by all
 text stats (a BPE-ish budget proxy); swap in a real tokenizer via a
@@ -17,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from small_etl_spark.llm.textstats import tokens
+from small_etl_spark.llm.textstats import ngram_windows_sql, tokens, tokens_sql
 
 
 def pack_sequences(
@@ -153,22 +154,12 @@ def chunk_documents(
     """
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("need 0 <= overlap < chunk_tokens")
-    step = chunk_tokens - overlap
-    toks = tokens(F.lower(F.col(text_col)))
-    n = F.size(toks)
-    # number of windows: ceil(max(n - overlap, 1) / step) via int math
-    n_chunks = F.greatest(
-        (F.greatest(n - F.lit(overlap), F.lit(1)) + F.lit(step - 1))
-        / F.lit(step),
-        F.lit(1),
-    ).cast("int")
-    windows = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i * step + 1, chunk_tokens)),
+    windows = ngram_windows_sql(
+        tokens_sql(f"lower({text_col})"), chunk_tokens, chunk_tokens - overlap
     )
     return df.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(windows).alias("chunk_idx", "chunk_text"),
+        F.posexplode(F.expr(windows)).alias("chunk_idx", "chunk_text"),
     ).withColumn(
         "n_tokens", F.size(tokens(F.col("chunk_text"))).cast("bigint")
     )

@@ -23,83 +23,28 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from small_etl_spark.llm.textstats import WORD_RE, tokens
+from small_etl_spark.llm.textstats import ngram_windows_sql, tokens, tokens_sql
 # re-exported under the historical name: queries.py imports it from here
 from small_etl_spark.llm.util import ensure_parallelism as _ensure_parallelism
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the normalized text.
+def word_shingles(col: str, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of the normalized text; ``col`` is
+    a SQL expression string.
 
-    Built entirely from array built-ins: tokens → sliding window via
-    ``sequence`` + ``transform`` + ``slice`` → ``concat_ws`` →
-    ``array_distinct``. Short docs (< n tokens) get one whole-text
-    shingle so they can still match exact copies.
+    The shingles are the ``n``-token windows of
+    :func:`~small_etl_spark.llm.textstats.ngram_windows_sql`,
+    deduplicated. Short docs (< n tokens) get one whole-text shingle so
+    they can still match exact copies.
 
     Tokenizes ``lower(text)`` directly — the word-regex extraction
     ignores whitespace, so the normalize_text whitespace-collapse pass
-    would produce identical tokens at 2× the regex cost.
-
-    Round 13 (guide §1.2 step 2): the token array is BOUND TO A LAMBDA
-    VARIABLE (``transform(array(toks), tk -> …)`` + ``element_at``)
-    instead of appearing inline in both ``size`` and the sliding
-    lambda. Higher-order functions are interpreted with no
-    cross-reference CSE, so the inline form re-evaluated the
-    regexp_extract_all subtree per reference — measured −34% on the
-    shingle stage at sf0.1 (A/B in OPTIMIZATION_r13.md), row-identical
-    by exceptAll. The binding evaluates the regex exactly once per row
-    at any scale.
-
-    Second per-task cut (same round, same A/B discipline): full
-    windows build each shingle with ``concat(element_at(tk, i), ' ',
-    …)`` instead of ``concat_ws(' ', slice(tk, i, n))`` — three O(1)
-    element reads replace a per-window array allocation; short docs
-    (< n tokens) keep the whole-text ``concat_ws`` branch, so output
-    is identical (tokens are never null, making concat ≡ concat_ws on
-    full windows). A further −18% on the shingle stage, winners 5/5.
+    would produce identical tokens at 2× the regex cost. Built from SQL
+    text: one ``F.expr`` parse replaces ~60 py4j round trips per call
+    (round 12), and plan construction is part of every query's latency.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    toks = tokens(F.lower(c))
-
-    def build(tk: Column) -> Column:
-        def gram(i: Column) -> Column:
-            parts: list[Column] = []
-            for j in range(n):
-                if j:
-                    parts.append(F.lit(" "))
-                parts.append(F.element_at(tk, i + F.lit(j) if j else i))
-            return F.concat(*parts)
-
-        full = F.transform(
-            F.sequence(F.lit(1), F.size(tk) - F.lit(n - 1)), gram
-        )
-        return F.array_distinct(
-            F.when(F.size(tk) >= n, full).otherwise(
-                F.array(F.concat_ws(" ", tk))
-            )
-        )
-
-    return F.element_at(F.transform(F.array(toks), build), 1)
-
-
-def _word_shingles_sql(col: str, n: int = 3) -> str:
-    """SQL-text twin of :func:`word_shingles` for hot builders (round
-    12): one ``F.expr`` parse replaces ~60 py4j round trips per call —
-    the driver-side plan-construction cost is part of every query's
-    latency, and the parsed tree is token-identical to the Column
-    build (same WORD_RE literal, same lambda-bound token array as the
-    round-13 Column form — see :func:`word_shingles` for why the
-    binding beats the inline duplicated subtree). ``col`` is a SQL
-    expression string."""
-    toks = f"regexp_extract_all(lower({col}), '{WORD_RE}', 0)"
-    gram = ", ' ', ".join(
-        f"element_at(tk, i{f' + {j}' if j else ''})" for j in range(n)
-    )
-    return (
-        f"element_at(transform(array({toks}), tk -> array_distinct("
-        f"CASE WHEN size(tk) >= {n} THEN "
-        f"transform(sequence(1, size(tk) - {n - 1}), i -> concat({gram})) "
-        f"ELSE array(concat_ws(' ', tk)) END)), 1)"
+    return F.expr(
+        f"array_distinct({ngram_windows_sql(tokens_sql(f'lower({col})'), n)})"
     )
 
 
@@ -115,173 +60,55 @@ def _word_shingles_sql(col: str, n: int = 3) -> str:
 # either. Measured interleaved, same session, min-of-3.
 
 
-def minhash_signature(
-    shingles: Column,
-    num_hashes: int = 32,
-    seed: int = 42,
-    hash_family: str = "xxhash64",
-    base_col: Column | None = None,
-) -> Column:
-    """MinHash signature: array of ``num_hashes`` minima over the
-    shingle set.
+def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
+    """Portable MinHash signature: array of ``num_hashes`` minima over
+    the shingle set, where hash i of shingle x is ``md5("{i}:" + x)``
+    and minima compare lexicographically on the hex string.
 
-    ``hash_family="xxhash64"`` (default, the 100 TB path): each shingle
-    string is xxhash64'd ONCE; the ``num_hashes`` functions are derived
-    by universal hashing ((h·a_i + b_i) mod p, p = 2^31-1) — 32× less
-    string hashing than hashing per seed, same collision behavior, and
-    every intermediate fits in a bigint (ANSI-safe: h is reduced mod p
-    first, so products stay < 2^62).
-
-    ``hash_family="md5"`` (portable): hash i of shingle x is
-    ``md5("{i}:" + x)`` and minima compare lexicographically on the hex
-    string. md5 is md5 in every engine, so this family is exactly
-    reproducible in a DuckDB oracle (the same trick
-    ``winnow_fingerprints`` uses) — slower (one digest per shingle per
-    hash), so it's the correctness twin, not the bench path.
+    md5 is md5 in every engine, so this family is exactly reproducible
+    in a DuckDB oracle (the same trick ``winnow_fingerprints`` uses) —
+    slower (one digest per shingle per hash), so it's the correctness
+    twin, not the bench path. The xxhash64 family is
+    :func:`_minhash_minima_sql`.
     """
-    if hash_family == "md5":
 
-        def salted(i: int):
-            # closure factory: a default-arg lambda would read as
-            # binary (element, index) to F.transform
-            prefix = f"{i}:"
-            return lambda x: F.md5(F.concat(F.lit(prefix), x).cast("binary"))
+    def salted(i: int):
+        # closure factory: a default-arg lambda would read as
+        # binary (element, index) to F.transform
+        prefix = f"{i}:"
+        return lambda x: F.md5(F.concat(F.lit(prefix), x).cast("binary"))
 
-        return F.array(
-            *[
-                F.array_min(F.transform(shingles, salted(i)))
-                for i in range(num_hashes)
-            ]
-        )
-
-    p = (1 << 31) - 1  # Mersenne prime
-    params = _minhash_params(num_hashes, seed)
-    # ``base_col`` lets the caller materialize the per-shingle hash
-    # array ONCE (one column, one pass) instead of embedding this
-    # transform in each of the ``num_hashes`` minima expressions —
-    # higher-order functions are interpreted (no codegen CSE), so the
-    # inline form re-hashes every shingle num_hashes times.
-    base = (
-        base_col
-        if base_col is not None
-        else F.transform(
-            shingles, lambda x: F.pmod(F.xxhash64(x, F.lit(seed)), F.lit(p))
-        )
+    return F.array(
+        *[
+            F.array_min(F.transform(shingles, salted(i)))
+            for i in range(num_hashes)
+        ]
     )
-
-    def affine(a: int, b: int):
-        # closure factory: PySpark reads lambda arity, so no default args
-        return lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(p))
-
-    mins = [F.array_min(F.transform(base, affine(a, b))) for a, b in params]
-    return F.array(*mins)
-
-
-def _minhash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
-    """The seeded universal-hash (a, b) parameter list — drawn in ONE
-    place so the Column, SQL-text and Arrow forms of the minima can
-    never drift in drawing order (ADVICE r12): every form renders
-    from this list."""
-    import random
-
-    p = (1 << 31) - 1
-    rng = random.Random(seed)
-    return [
-        (rng.randrange(1, p), rng.randrange(p)) for _ in range(num_hashes)
-    ]
 
 
 def _minhash_minima_sql(num_hashes: int, seed: int) -> str:
-    """SQL-text of the ``num_hashes`` affine minima over the
-    materialized base-hash column ``__h__`` — the expr-string twin of
-    the ``base_col`` branch of :func:`minhash_signature` (same seeded
-    universal-hash params, same ``pmod(h·a + b, p)`` arithmetic), one
-    parse instead of ~250 py4j round trips. Plan identity vs the
-    Column form is pinned in tests/test_expr_builds.py; the Arrow
-    kernel below computes the same integers (bit-identity pinned in
-    tests/test_llm_similarity.py), so all three forms agree."""
-    p = (1 << 31) - 1
+    """SQL text of the xxhash64-family MinHash signature: the
+    ``num_hashes`` minima over the materialized base-hash column
+    ``__h__`` (each shingle xxhash64'd ONCE, reduced mod p).
+
+    The ``num_hashes`` functions are derived by seeded universal
+    hashing, ``pmod(h·a_i + b_i, p)`` with p = 2^31-1 — 32× less string
+    hashing than hashing per seed, same collision behavior, and every
+    intermediate fits in a bigint (ANSI-safe: h < p, so products stay
+    < 2^62). One parse instead of ~250 py4j round trips.
+    """
+    import random
+
+    p = (1 << 31) - 1  # Mersenne prime
+    rng = random.Random(seed)
+    params = [
+        (rng.randrange(1, p), rng.randrange(p)) for _ in range(num_hashes)
+    ]
     mins = ",".join(
-        f"array_min(transform(__h__,"
-        f" h -> pmod(h * {a} + {b}, {p})))"
-        for a, b in _minhash_params(num_hashes, seed)
+        f"array_min(transform(__h__, h -> pmod(h * {a} + {b}, {p})))"
+        for a, b in params
     )
     return f"array({mins})"
-
-
-def _minhash_minima_arrow(
-    src: DataFrame, num_hashes: int, seed: int
-) -> DataFrame:
-    """``(id, __h__: array<bigint>)`` → ``(id, sig: array<bigint>)``:
-    the ``num_hashes`` affine minima of the xxhash64 family as one
-    Arrow ``mapInArrow`` kernel (guide §4.2 — dense integer math in a
-    vectorized native library instead of interpreted HOFs).
-
-    Bit-identical to the expression form in
-    :func:`minhash_signature`: same universal-hash params (seeded RNG),
-    same (h·a + b) mod p arithmetic — h < p = 2³¹−1 and a < p keep
-    every product under 2⁶², so int64 numpy never overflows and
-    ``np.mod`` equals Java ``pmod`` on the nonnegative operands. The
-    per-batch work is ``num_hashes`` passes of multiply+mod over the
-    flattened shingle-hash values plus one ``np.minimum.reduceat`` per
-    pass — replacing per-element interpreted ``transform``/``array_min``
-    evaluation, which profiling showed was ~70% of the whole query's
-    executor CPU at sf0.1 (see OPTIMIZATION_r12.md). Null or empty
-    hash arrays yield an all-null 32-element signature, exactly like
-    ``array_min(transform(NULL, …))`` in the expression form (those
-    docs band together and are always discarded by the exact-Jaccard
-    verify, in both paths).
-    """
-    p = (1 << 31) - 1
-    params = _minhash_params(num_hashes, seed)
-    id_type = src.schema["id"].dataType.simpleString()
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        a_arr = np.array([a for a, _ in params], dtype=np.int64)
-        b_arr = np.array([b for _, b in params], dtype=np.int64)
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0)
-            lst = batch.column(1)
-            if isinstance(lst, pa.ChunkedArray):
-                lst = lst.combine_chunks()
-            offsets = lst.offsets.to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            values = lst.values.to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            valid = (
-                lst.is_valid().to_numpy(zero_copy_only=False)
-                if lst.null_count
-                else np.ones(n, dtype=bool)
-            )
-            starts, ends = offsets[:-1], offsets[1:]
-            dead = (~valid) | (starts == ends)  # null or empty → null sig
-            safe_starts = np.minimum(
-                starts, max(len(values) - 1, 0)
-            )  # reduceat needs in-range indices even for dead rows
-            mins = np.empty((n, num_hashes), dtype=np.int64)
-            if len(values):
-                for i in range(num_hashes):
-                    v = (values * a_arr[i] + b_arr[i]) % p
-                    mins[:, i] = np.minimum.reduceat(v, safe_starts)
-            flat = mins.reshape(-1)
-            null_mask = np.repeat(dead, num_hashes)
-            sig = pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(n + 1, dtype=np.int32) * num_hashes
-                ),
-                pa.array(flat, mask=null_mask),
-            )
-            yield pa.RecordBatch.from_arrays([ids, sig], ["id", "sig"])
-
-    return src.mapInArrow(kernel, schema=f"id {id_type}, sig array<bigint>")
 
 
 def minhash_lsh_pairs(
@@ -407,8 +234,8 @@ def _shingle_band_tables(
     n_part = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    sh = base.selectExpr(
-        "id", f"{_word_shingles_sql('__t__', shingle_n)} as sh"
+    sh = base.select(
+        "id", word_shingles("__t__", shingle_n).alias("sh")
     ).repartition(n_part, "id")
     if storage == "localckpt":
         sh = sh.localCheckpoint(eager=False)
@@ -424,19 +251,10 @@ def _shingle_band_tables(
     # materialize the per-shingle base-hash array as its own column
     # first: the minima run over it num_hashes times, and HOFs get no
     # codegen CSE (measured ~1.9× on the signature stage at sf0.1).
-    # The affine minima stay JVM-side interpreted HOFs: the round-12
-    # Arrow numpy kernel (_minhash_minima_arrow, kept + bit-identity
-    # tested) cut executor CPU but LOST wall under solo bench
-    # conditions — interleaved min-of-5 at sf0.1: HOF 1.248 s vs
-    # kernel 1.484 s, HOF faster in all 5 rep pairs; the
-    # (id, ~300×bigint array) Arrow round trip outweighs the
-    # interpreted-math saving at this row width. The kernel's earlier
-    # win was measured under heavy host contention (see
-    # OPTIMIZATION_r12.md, minhash section, for both A/Bs).
+    # Do not re-add an Arrow (numpy) minima kernel: it lost the r12
+    # interleaved A/B at sf0.1, HOF 1.248 s vs kernel 1.484 s.
     if hash_family == "md5":
-        sig_src = sh
-        sig = minhash_signature(F.col("sh"), num_hashes, seed, hash_family)
-        sig_df = sig_src.withColumn("sig", sig)
+        sig_df = sh.withColumn("sig", minhash_signature(F.col("sh"), num_hashes))
     else:
         p = (1 << 31) - 1
         hashed = sh.selectExpr(
@@ -641,7 +459,7 @@ def prefix_filter_jaccard_pairs(
     )
 
 
-def winnow_fingerprints(col: Column | str, k: int = 5, w: int = 4) -> Column:
+def winnow_fingerprints(col: str, k: int = 5, w: int = 4) -> Column:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03): the minimum hash of every ``w``-window over the
     ordered ``k``-gram hash sequence, deduplicated and sorted.
@@ -664,20 +482,28 @@ def winnow_fingerprints(col: Column | str, k: int = 5, w: int = 4) -> Column:
     per-position ``array_min(slice(...))``, which is O(n·w) slices
     through Spark's interpreted higher-order functions and measured
     5× slower at w=4 (the SimHash per-bit-aggregate lesson again).
+    ``col`` is a SQL expression string.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    toks = tokens(F.lower(c))
-    n_g = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), n_g), lambda i: F.concat_ws(" ", F.slice(toks, i, k))
-    )
+    grams = F.expr(ngram_windows_sql(tokens_sql(f"lower({col})"), k))
     hashes = F.transform(grams, lambda g: F.md5(g.cast("binary")))
+
+    def _let(value: Column, body) -> Column:
+        # body(value) with value bound to a lambda variable: each level
+        # reads its input twice, and HOFs get no CSE, so an inline input
+        # would re-run the whole gram/md5 pipeline per reference
+        return F.element_at(F.transform(F.array(value), body), 1)
 
     def _shift_min(m: Column, shift: int) -> Column:
         # elementwise min of m and m shifted left by `shift`; least()
         # skips the nulls zip_with pads the shorter tail with
-        shifted = F.slice(m, shift + 1, F.greatest(F.size(m) - shift, F.lit(1)))
-        return F.zip_with(m, shifted, lambda a, b: F.least(a, b))
+        return _let(
+            m,
+            lambda x: F.zip_with(
+                x,
+                F.slice(x, shift + 1, F.greatest(F.size(x) - shift, F.lit(1))),
+                lambda a, b: F.least(a, b),
+            ),
+        )
 
     mins, span = hashes, 1
     while span * 2 <= w:
@@ -685,8 +511,15 @@ def winnow_fingerprints(col: Column | str, k: int = 5, w: int = 4) -> Column:
         span *= 2
     if span < w:
         mins = _shift_min(mins, w - span)
-    n_w = F.greatest(F.size(hashes) - F.lit(w - 1), F.lit(1))
-    return F.array_sort(F.array_distinct(F.slice(mins, 1, n_w)))
+    # zip_with keeps the longer (left) length: size(mins) = size(hashes)
+    return _let(
+        mins,
+        lambda m: F.array_sort(
+            F.array_distinct(
+                F.slice(m, 1, F.greatest(F.size(m) - F.lit(w - 1), F.lit(1)))
+            )
+        ),
+    )
 
 
 def winnowing_pairs(
@@ -1069,8 +902,8 @@ def cross_doc_segment_dedup(
     Returns ``(id_col, clean_text, n_kept, n_dropped)``.
 
     Plan shape (and why it scales):
-      1. map-only segmentation — ``split`` + strided ``slice`` under
-         ``transform``, all codegen'd, no Python;
+      1. map-only segmentation — ``split`` into strided
+         ``ngram_windows_sql`` windows, all JVM-side, no Python;
       2. posexplode to (doc, pos, segment) rows;
       3. ONE shuffle: groupBy(segment) → count distinct docs (partial
          aggs combine map-side, so hot boilerplate segments collapse
@@ -1085,19 +918,11 @@ def cross_doc_segment_dedup(
     both on keys with bounded group sizes. Compare winnow/minhash
     passes in this module: same explode→agg→join discipline.
     """
-    words = F.split(F.col(text_col), " ")
-    nseg = F.ceil(F.size(words) / F.lit(float(seg_words))).cast("int")
-    segs = F.when(
-        nseg >= 1,
-        F.transform(
-            F.sequence(F.lit(1), nseg),
-            lambda i: F.concat_ws(
-                " ", F.slice(words, (i - 1) * seg_words + 1, seg_words)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    exploded = docs.select(
-        F.col(id_col), F.posexplode(segs).alias("pos", "seg")
+    # NULL text has no segments: drop it before segmenting (the
+    # window primitive would give it one empty segment)
+    segs = ngram_windows_sql(f"split({text_col}, ' ')", seg_words, seg_words)
+    exploded = docs.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col), F.posexplode(F.expr(segs)).alias("pos", "seg")
     )
     counts = exploded.groupBy("seg").agg(
         F.count_distinct(F.col(id_col)).alias("nd")
@@ -1254,6 +1079,10 @@ def dup_span_coverage(
         toks.alias("__toks__"),
         F.size(toks).alias("__T__"),
     )
+    # one row per gram start, then a row-level (codegen'd) slice: the
+    # ngram_windows_sql array form builds the same grams inside an
+    # interpreted higher-order function and lost the A/B on this
+    # operator at sf0.1 (1.29 s vs 1.68 s, slower in 10/10 pairs)
     grams = (
         base.filter(F.col("__T__") >= n)
         .select(
@@ -1335,29 +1164,22 @@ def segment_dedup_first_wins(
 
     Returns ``(id_col, clean_text, n_kept, n_dropped)``.
 
-    Plan shape: map-only strided segmentation (split + slice under
-    transform, codegen'd) → posexplode → ONE segment-keyed shuffle
-    computing ``min(struct(id, pos))`` per segment (partial aggs
-    combine map-side, so hot segments collapse before the wire) →
-    equi-join back (AQE elects broadcast only if the distinct-segment
-    side is tiny) → per-doc reassembly with bounded group size. At
+    Plan shape: map-only strided segmentation (split into
+    ``ngram_windows_sql`` windows, JVM-side) → posexplode → ONE
+    segment-keyed shuffle computing ``min(struct(id, pos))`` per
+    segment (partial aggs combine map-side, so hot segments collapse
+    before the wire) → equi-join back (AQE elects broadcast only if
+    the distinct-segment side is tiny) → per-doc reassembly with
+    bounded group size. At
     100 TB: two hash shuffles on bounded-group keys, nothing
     pairwise — the same discipline as every explode→agg→join pass in
     this module.
     """
-    words = F.split(F.col(text_col), " ")
-    nseg = F.ceil(F.size(words) / F.lit(float(seg_words))).cast("int")
-    segs = F.when(
-        nseg >= 1,
-        F.transform(
-            F.sequence(F.lit(1), nseg),
-            lambda i: F.concat_ws(
-                " ", F.slice(words, (i - 1) * seg_words + 1, seg_words)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    exploded = docs.select(
-        F.col(id_col), F.posexplode(segs).alias("pos", "seg")
+    # NULL text has no segments: drop it before segmenting (the
+    # window primitive would give it one empty segment)
+    segs = ngram_windows_sql(f"split({text_col}, ' ')", seg_words, seg_words)
+    exploded = docs.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col), F.posexplode(F.expr(segs)).alias("pos", "seg")
     )
     firsts = exploded.groupBy("seg").agg(
         F.min(F.struct(F.col(id_col).alias("fid"), F.col("pos").alias("fpos"))).alias(

@@ -28,22 +28,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from small_etl_spark.llm.textstats import WORD_RE, unigram_logprob
+from small_etl_spark.llm.textstats import tokens_sql, unigram_logprob
 from small_etl_spark.operators.sort import global_cumsum
 
 # The expr-text builds below embed regex patterns as SQL string
 # literals, written for the DEFAULT parser escaping
 # (spark.sql.parser.escapedStringLiterals=false: '\\s+' in the SQL
-# text parses to the regex \s+). WORD_RE is interpolated verbatim and
-# is only safe while it contains no quote or backslash — both
-# assumptions are asserted (once per session / at import) so a conf
-# or regex change fails loudly instead of silently altering the
-# dedup/filter semantics (ADVICE r12).
-assert "'" not in WORD_RE and "\\" not in WORD_RE, (
-    "WORD_RE is interpolated into SQL string literals verbatim; "
-    "quotes/backslashes would change the parsed regex — escape per "
-    "the active parser mode before relaxing this."
-)
+# text parses to the regex \s+). The parser mode is checked once per
+# session so a conf change fails loudly instead of silently altering
+# the dedup/filter semantics (ADVICE r12); the WORD_RE literal is
+# guarded where it is defined (llm/textstats.py).
 _ESCAPING_CHECKED: set[str] = set()
 
 
@@ -99,7 +93,7 @@ def _survivor_docs(
     pinned: bare SQL floats are DECIMAL, so every float parameter is
     written with the ``D`` double suffix.
     """
-    n_toks = f"size(regexp_extract_all({text_col}, '{WORD_RE}', 0))"
+    n_toks = f"size({tokens_sql(text_col)})"
     sym_ratio = (
         f"CASE WHEN (length({text_col}) > 0) THEN "
         f"(CAST(length(regexp_replace({text_col}, '[A-Za-z0-9_\\\\s]', ''))"
@@ -187,8 +181,7 @@ def curate_corpus(
 
     keyed = kept.selectExpr(
         id_col,
-        f"CAST(size(regexp_extract_all({text_col}, '{WORD_RE}', 0))"
-        f" AS bigint) AS n_tokens",
+        f"CAST(size({tokens_sql(text_col)}) AS bigint) AS n_tokens",
         "quality",
         f"substring(md5(CAST(concat_ws('|', '{_sql_str(salt)}',"
         f" CAST({id_col} AS string)) AS binary)), 1, 4) AS __h__",

@@ -26,12 +26,67 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 WORD_RE = r"[A-Za-z0-9_]+"
+# tokens_sql interpolates WORD_RE into a SQL string literal verbatim,
+# written for the default parser escaping: a quote or backslash would
+# change the parsed regex. An explicit raise, not an assert, so the
+# guard also holds under ``python -O``.
+if "'" in WORD_RE or "\\" in WORD_RE:
+    raise ValueError(
+        "WORD_RE is interpolated into SQL string literals verbatim; "
+        "escape it per the active parser mode before adding quotes or "
+        "backslashes"
+    )
 
 
 def tokens(col: Column | str) -> Column:
     """Whitespace/word tokenization: array of word tokens."""
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_extract_all(c, F.lit(WORD_RE), 0)
+
+
+def tokens_sql(col_sql: str) -> str:
+    """SQL-text twin of :func:`tokens` over the SQL expression
+    ``col_sql`` (parses to the same ``regexp_extract_all`` node)."""
+    return f"regexp_extract_all({col_sql}, '{WORD_RE}', 0)"
+
+
+def ngram_windows_sql(toks_sql: str, n: int, step: int = 1) -> str:
+    """SQL text of the ``' '``-joined ``n``-token windows of the token
+    array ``toks_sql``, starting at tokens 1, 1+step, 1+2·step, …
+    until the windows cover the array. The last window is ragged
+    (shorter than ``n``) when ``step > 1`` and the stride does not land
+    on the end. A doc with fewer than ``n`` tokens yields one
+    whole-text window, so empty and NULL token arrays give ``[""]``.
+
+    The token array is bound to a lambda variable
+    (``element_at(transform(array(toks), tk -> …), 1)``), so its
+    expression — typically a regex extraction — runs once per row.
+    Higher-order functions are interpreted without common-subexpression
+    elimination, so an inline array would re-run per reference (−34%
+    on the shingle stage at sf0.1, OPTIMIZATION_r13.md). Full windows
+    are ``concat`` of ``n`` O(1) ``element_at`` reads rather than
+    ``concat_ws(' ', slice(…))``, which allocates an array per window
+    (a further −18%); ``slice`` is left only for the ragged last window
+    and the short-doc case. Tokens are never null, so ``concat`` equals
+    ``concat_ws`` on full windows.
+    """
+    gram = ", ' ', ".join(
+        f"element_at(tk, i{f' + {j}' if j else ''})" for j in range(n)
+    )
+    if step == 1:
+        starts = f"sequence(1, size(tk) - {n - 1})"
+        window = f"concat({gram})"
+    else:
+        starts = f"sequence(1, size(tk) - {n - step}, {step})"
+        window = (
+            f"CASE WHEN i <= size(tk) - {n - 1} THEN concat({gram}) "
+            f"ELSE concat_ws(' ', slice(tk, i, {n})) END"
+        )
+    return (
+        f"element_at(transform(array({toks_sql}), tk -> "
+        f"CASE WHEN size(tk) >= {n} THEN transform({starts}, i -> {window}) "
+        f"ELSE array(concat_ws(' ', tk)) END), 1)"
+    )
 
 
 def token_count(col: Column | str) -> Column:
@@ -135,18 +190,7 @@ def repetition_stats(
         .otherwise(F.lit(0.0))
         .alias("dup_line_fraction"),
         F.explode(
-            F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.greatest(
-                        F.size(tokens(F.lower(F.col(text_col)))) - F.lit(gram_n - 1),
-                        F.lit(1),
-                    ),
-                ),
-                lambda i: F.concat_ws(
-                    " ", F.slice(tokens(F.lower(F.col(text_col))), i, gram_n)
-                ),
-            )
+            F.expr(ngram_windows_sql(tokens_sql(f"lower({text_col})"), gram_n))
         ).alias("gram"),
     )
     per_gram = base.groupBy("doc_id", "dup_line_fraction", "gram").agg(
@@ -547,8 +591,7 @@ def unigram_logprob(
     # specification).
     toks = df.selectExpr(
         id_col,
-        f"explode(regexp_extract_all(lower({text_col}), '{WORD_RE}', 0))"
-        f" AS tok",
+        f"explode({tokens_sql(f'lower({text_col})')}) AS tok",
     )
     lm = toks.groupBy("tok").agg(F.expr("count(1) AS cnt"))
     sizes = lm.agg(

@@ -128,8 +128,8 @@ def global_ordinal(
     The distributed pattern: range-partition on the order columns
     (sampled split points keep partitions balanced) and PIN the
     exchange, count each partition, prefix-sum those counts into
-    per-partition offsets (a partition-count-sized list —
-    driver-trivial), broadcast-join the offsets back, then
+    per-partition offsets with a window over the partition-count-sized
+    ``(pid, total)`` aggregate, broadcast-join the offsets back, then
     ``ordinal = offset[pid] + local_rank`` where the local window
     partitions BY pid — every partition ranks in parallel. Used for
     curriculum ordering (train on quality-sorted corpora), stable
@@ -165,8 +165,9 @@ def global_cumsum(
     Same two-phase shape as :func:`global_ordinal` (via
     :func:`_ranged_with_offsets` — pinned range exchange + broadcast-
     joined offsets): aggregate one (pid → partition total) row per
-    partition, prefix-sum those totals on the driver
-    (partition-count-sized), then add each partition's offset to its
+    partition, prefix-sum those totals with a window over that
+    partition-count-sized ``(pid, total)`` aggregate, then add each
+    partition's offset to its
     LOCAL running sum — every partition computes its window in
     parallel. The cumsum is INCLUSIVE of the current row; include a
     unique tiebreak in ``order_cols`` for determinism.

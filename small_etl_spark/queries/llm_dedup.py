@@ -375,7 +375,7 @@ def q_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-window chunking, 64 tokens / 8 overlap
-    (llm.chunking.chunk_documents): strided slices + posexplode, one
+    (llm.chunking.chunk_documents): strided windows + posexplode, one
     map-only pass — the shape a 100 TB pre-training tokenize step
     wants."""
     from small_etl_spark.llm.chunking import chunk_documents

@@ -1050,7 +1050,7 @@ def q_minhash_merge_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = docs.select(
         "source",
         (F.col("doc_id") % 2).alias("half"),
-        F.explode(word_shingles(F.col("text"), 3)).alias("shingle"),
+        F.explode(word_shingles("text", 3)).alias("shingle"),
     )
 
     def md5i(i: int) -> Column:

@@ -4,12 +4,15 @@ The hot builders construct their trees from SQL text (one py4j round
 trip per select) instead of per-Column JVM calls — these tests pin
 that the OPTIMIZED plans are canonically identical (``sameResult``),
 so the rewrite can never change what a query computes. The Column
-forms inlined here are the pre-round-12 specifications.
+forms inlined here are the pre-round-12 specifications. The n-gram
+window sites are pinned by rows instead (their SQL-text form is a
+different, equivalent tree): see test_ngram_windows_match_site_specs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Window, functions as F
+import pytest
+from pyspark.sql import Column, Window, functions as F
 
 from small_etl_spark.llm.similarity import brute_force_topk, dot, l2_norm
 from small_etl_spark.llm.util import ensure_parallelism
@@ -306,9 +309,7 @@ def test_curation_survivors_expr_build_same_plan(spark):
 def test_minhash_minima_sql_same_plan_as_column_form(spark):
     """The shipping xxhash-family signature (expr-text affine minima
     over the materialized base-hash array) is plan-identical to the
-    minhash_signature Column form; the Arrow kernel's bit-identity to
-    that same Column form is pinned in tests/test_llm_similarity.py,
-    so all three implementations agree."""
+    pre-round-12 Column form inlined below."""
     import random
 
     from small_etl_spark.llm.dedup import _minhash_minima_sql
@@ -346,3 +347,118 @@ def test_minhash_minima_sql_same_plan_as_column_form(spark):
     )
 
     assert _same_result(expr_form, column_form)
+
+
+def _site_specs(case: str) -> tuple[Column, Column]:
+    """(pre-change Column spec, new form) for one converted
+    n-gram window site. Each spec is that site's expression before it
+    was routed through ``ngram_windows_sql``."""
+    from small_etl_spark.llm.dedup import word_shingles
+    from small_etl_spark.llm.textstats import (
+        ngram_windows_sql,
+        tokens,
+        tokens_sql,
+    )
+
+    words_sql = tokens_sql("lower(text)")
+    words = tokens(F.lower(F.col("text")))
+    split = F.split(F.col("text"), " ")
+
+    if case == "shingles-3":  # dedup.word_shingles (round-13 Column form)
+        n = 3
+
+        def build(tk):
+            def gram(i):
+                parts = []
+                for j in range(n):
+                    if j:
+                        parts.append(F.lit(" "))
+                    parts.append(F.element_at(tk, i + F.lit(j) if j else i))
+                return F.concat(*parts)
+
+            full = F.transform(
+                F.sequence(F.lit(1), F.size(tk) - F.lit(n - 1)), gram
+            )
+            return F.array_distinct(
+                F.when(F.size(tk) >= n, full).otherwise(
+                    F.array(F.concat_ws(" ", tk))
+                )
+            )
+
+        spec = F.element_at(F.transform(F.array(words), build), 1)
+        return spec, word_shingles("text", n)
+    if case in ("winnow-5", "repetition-2"):
+        # dedup.winnow_fingerprints grams / textstats.repetition_stats
+        n = 5 if case == "winnow-5" else 2
+        spec = F.transform(
+            F.sequence(
+                F.lit(1), F.greatest(F.size(words) - F.lit(n - 1), F.lit(1))
+            ),
+            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
+        )
+        return spec, F.expr(ngram_windows_sql(words_sql, n))
+    if case == "segments-3/3":  # both dedup segment splitters
+        seg = 3
+        nseg = F.ceil(F.size(split) / F.lit(float(seg))).cast("int")
+        spec = F.when(
+            nseg >= 1,
+            F.transform(
+                F.sequence(F.lit(1), nseg),
+                lambda i: F.concat_ws(
+                    " ", F.slice(split, (i - 1) * seg + 1, seg)
+                ),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+        split_sql = "split(text, ' ')"
+        return spec, F.expr(ngram_windows_sql(split_sql, seg, seg))
+    # chunking.chunk_documents
+    chunk, overlap = {"chunks-64/56": (64, 8), "chunks-4/3": (4, 1)}[case]
+    step = chunk - overlap
+    n_chunks = F.greatest(
+        (F.greatest(F.size(words) - F.lit(overlap), F.lit(1)) + F.lit(step - 1))
+        / F.lit(step),
+        F.lit(1),
+    ).cast("int")
+    spec = F.transform(
+        F.sequence(F.lit(0), n_chunks - 1),
+        lambda i: F.concat_ws(" ", F.slice(words, i * step + 1, chunk)),
+    )
+    return spec, F.expr(ngram_windows_sql(words_sql, chunk, step))
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "shingles-3",
+        "winnow-5",
+        "repetition-2",
+        "segments-3/3",
+        "chunks-64/56",
+        "chunks-4/3",
+    ],
+)
+def test_ngram_windows_match_site_specs(spark, case):
+    """Every site routed through ``ngram_windows_sql`` produces exactly
+    the windows its pre-change expression produced, row for row
+    (exceptAll both ways), on edge inputs — NULL, empty, blank, one
+    token, exactly n, a ragged stride tail, long — plus sf0.001."""
+    counts = [1, 2, 3, 4, 5, 7, 8, 64, 120, 123, 300]
+    edge = [(-1, None), (-2, ""), (-3, " "), (-4, "Hello,  WORLD  x y")] + [
+        (-10 - c, " ".join(f"w{i % 7}" for i in range(c))) for c in counts
+    ]
+    docs = spark.createDataFrame(edge, "doc_id bigint, text string").union(
+        load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    )
+    spec, new = _site_specs(case)
+    if case == "segments-3/3":
+        # the splitters drop NULL text: its pre-change segment array
+        # is empty, so dropping it changes no output row
+        assert docs.filter("text IS NULL").select(
+            F.size(spec)
+        ).first()[0] == 0
+        docs = docs.filter("text IS NOT NULL")
+
+    want = docs.select("doc_id", spec.alias("w"))
+    got = docs.select("doc_id", new.alias("w"))
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0

@@ -1099,68 +1099,6 @@ def test_ivfpq_refine_honors_tombstones_and_bounds_io(
     assert n_cand <= 4 * 10 * 5
 
 
-def test_arrow_minima_kernel_bit_identical_to_expression(spark):
-    """Round-12 optimization pin: the Arrow numpy affine-minima kernel
-    (_minhash_minima_arrow) must produce EXACTLY the signature the
-    interpreted expression form produces — same universal-hash params,
-    same integers — including the all-null signature for null/empty
-    hash arrays (the array_min(transform(NULL,…)) contract)."""
-    from small_etl_spark.llm.dedup import (
-        _minhash_minima_arrow,
-        minhash_signature,
-    )
-
-    docs = spark.createDataFrame(
-        DOCS, ["doc_id", "text", "source"]
-    ).union(
-        spark.createDataFrame(
-            [(7, None, "c"), (8, "", "c")], ["doc_id", "text", "source"]
-        )
-    )
-    p = (1 << 31) - 1
-    sh = docs.select(
-        F.col("doc_id").alias("id"), word_shingles("text", 3).alias("sh")
-    )
-    hashed = sh.select(
-        "id",
-        F.transform(
-            F.col("sh"),
-            lambda x: F.pmod(F.xxhash64(x, F.lit(42)), F.lit(p)),
-        ).alias("__h__"),
-    )
-    expr = sh.withColumn(
-        "__h__",
-        F.transform(
-            F.col("sh"),
-            lambda x: F.pmod(F.xxhash64(x, F.lit(42)), F.lit(p)),
-        ),
-    ).select(
-        "id",
-        minhash_signature(
-            F.col("sh"), 32, 42, "xxhash64", base_col=F.col("__h__")
-        ).alias("sig"),
-    )
-    got = {r["id"]: r["sig"] for r in _minhash_minima_arrow(hashed, 32, 42).collect()}
-    want = {r["id"]: r["sig"] for r in expr.collect()}
-    assert got == want
-    assert len(got) == 8
-
-
-def test_arrow_minima_kernel_empty_and_null_rows(spark):
-    """Explicit null/empty hash-array rows → a 32-element all-null
-    signature (never a crash, never a zero)."""
-    from small_etl_spark.llm.dedup import _minhash_minima_arrow
-
-    df = spark.createDataFrame(
-        [(1, [5, 9]), (2, []), (3, None)],
-        "id bigint, __h__ array<bigint>",
-    )
-    rows = {r["id"]: r["sig"] for r in _minhash_minima_arrow(df, 4, 42).collect()}
-    assert len(rows[1]) == 4 and all(v is not None for v in rows[1])
-    assert rows[2] == [None] * 4
-    assert rows[3] == [None] * 4
-
-
 def test_python_kernel_width_is_bytes_adaptive(spark):
     """Round-12 pin: ensure_parallelism(bytes_per_task=…) sizes the
     repartition by input bytes (few fat batches for tiny inputs, full

@@ -284,7 +284,7 @@ def test_minhash_merge_is_exact_identity(spark):
     )
     sig = df.select(
         minhash_signature(
-            word_shingles(F.col("text"), 3), num_hashes=8, hash_family="md5"
+            word_shingles("text", 3), num_hashes=8
         ).alias("s")
     ).collect()
     both = spark.createDataFrame(
@@ -292,7 +292,7 @@ def test_minhash_merge_is_exact_identity(spark):
         ["doc_id", "text"],
     ).select(
         minhash_signature(
-            word_shingles(F.col("text"), 3), num_hashes=8, hash_family="md5"
+            word_shingles("text", 3), num_hashes=8
         ).alias("s")
     ).collect()
     merged = [min(a, b) for a, b in zip(sig[0]["s"], sig[1]["s"])]
@@ -302,7 +302,7 @@ def test_minhash_merge_is_exact_identity(spark):
     union_sh = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "epsilon zeta eta theta")],
         ["doc_id", "text"],
-    ).select(F.explode(word_shingles(F.col("text"), 3)).alias("sh"))
+    ).select(F.explode(word_shingles("text", 3)).alias("sh"))
     direct = union_sh.agg(
         *[
             F.min(
