@@ -34,11 +34,10 @@ from small_etl_spark.operators.sort import global_cumsum
 # The expr-text builds below embed regex patterns as SQL string
 # literals, written for the DEFAULT parser escaping
 # (spark.sql.parser.escapedStringLiterals=false: '\\s+' in the SQL
-# text parses to the regex \s+). The parser mode is checked once per
-# session so a conf change fails loudly instead of silently altering
-# the dedup/filter semantics (ADVICE r12); the WORD_RE literal is
+# text parses to the regex \s+). The parser mode is a runtime conf, so
+# it is re-read on every call: a conf change fails loudly instead of
+# silently altering the dedup/filter semantics; the WORD_RE literal is
 # guarded where it is defined (llm/textstats.py).
-_ESCAPING_CHECKED: set[str] = set()
 
 
 def _sql_str(value: str) -> str:
@@ -50,14 +49,12 @@ def _sql_str(value: str) -> str:
 
 def _check_parser_escaping(df: DataFrame) -> None:
     """Assert the session parses string literals with the default
-    backslash escaping the expr texts below were written for
-    (memoized per session — one conf round trip, not per build)."""
-    spark = df.sparkSession
-    key = spark.sparkContext.applicationId
-    if key in _ESCAPING_CHECKED:
-        return
+    backslash escaping the expr texts below were written for (one conf
+    round trip per call: the conf can change at runtime)."""
     mode = str(
-        spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
+        df.sparkSession.conf.get(
+            "spark.sql.parser.escapedStringLiterals", "false"
+        )
     ).lower()
     if mode != "false":
         raise RuntimeError(
@@ -66,7 +63,6 @@ def _check_parser_escaping(df: DataFrame) -> None:
             "literals '\\\\s+' / '[A-Za-z0-9_\\\\s]' would silently "
             "parse to different patterns)."
         )
-    _ESCAPING_CHECKED.add(key)
 
 
 def _survivor_docs(

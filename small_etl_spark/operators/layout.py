@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from small_etl_spark.session import local_frame
+
 ZBITS_DEFAULT = 8
 
 
@@ -239,7 +241,7 @@ def compact_parquet(
         for path, _ in members
     ]
     map_df = F.broadcast(
-        spark.createDataFrame(mapping, "__file__ string, __bin__ int")
+        local_frame(spark, mapping, "__file__ string, __bin__ int")
     )
     df = spark.read.parquet(src_path).withColumn(
         "__file__",
@@ -257,6 +259,4 @@ def compact_parquet(
         (b, len(members), sum(sz for _, sz in members))
         for b, members in enumerate(plan)
     ]
-    return spark.createDataFrame(
-        report, "bin int, n_files int, in_bytes bigint"
-    )
+    return local_frame(spark, report, "bin int, n_files int, in_bytes bigint")

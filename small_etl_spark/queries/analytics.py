@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from small_etl_spark.queries._registry import register
+from small_etl_spark.session import local_frame
 from small_etl_spark.sources.tables import load_table
 
 
@@ -916,7 +917,8 @@ def q_observed_write_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(m["rows"], m["price_cents"], m["null_flags"])],
         "rows bigint, price_cents bigint, null_flags bigint",
     )

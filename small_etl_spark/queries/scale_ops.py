@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from small_etl_spark.queries._registry import register
 from small_etl_spark.llm import textstats
+from small_etl_spark.session import local_frame
 from small_etl_spark.sources.tables import load_table
 
 
@@ -984,7 +985,8 @@ def q_bucketed_join_colocated(
         spark.sql("DROP TABLE IF EXISTS bkt_orders_gate")
         spark.sql("DROP TABLE IF EXISTS bkt_customer_gate")
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_rows, identical, no_shuffle)],
         "n_rows bigint, identical boolean, no_shuffle boolean",
     )
@@ -1503,7 +1505,8 @@ def q_versioned_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     V.add_constraint(spark, path, "chars_nonneg", "n_chars >= 0")
     head_before = V.latest_version(path)
-    bad = spark.createDataFrame(
+    bad = local_frame(
+        spark,
         [(max_id + 1, 10), (max_id + 2, -5)], "doc_id bigint, n_chars bigint"
     )
     rejected = False

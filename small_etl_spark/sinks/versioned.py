@@ -67,6 +67,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
+from small_etl_spark.session import local_frame
 from small_etl_spark.sinks.store import is_object_store, store_for
 
 _MANIFEST_DIR = "_manifests"
@@ -380,8 +381,8 @@ def _harvest_footer_entries(
                 out.append(json.dumps(e))
             yield pd.DataFrame({"entry": out})
 
-    files_df = spark.createDataFrame(
-        [(n,) for n in names], "name string"
+    files_df = local_frame(
+        spark, [(n,) for n in names], "name string"
     ).repartition(min(len(names), 32))
     rows = files_df.mapInPandas(_read_footers, "entry string").collect()
     entries = [json.loads(r.entry) for r in rows]  # file-count bounded
@@ -513,8 +514,8 @@ def _harvest_bloom_entries(
                 out.append(json.dumps({"name": name, "blooms": e}))
             yield pd.DataFrame({"entry": out})
 
-    files_df = spark.createDataFrame(
-        [(n,) for n in names], "name string"
+    files_df = local_frame(
+        spark, [(n,) for n in names], "name string"
     ).repartition(min(len(names), 32))
     rows = files_df.mapInPandas(_read_blooms, "entry string").collect()
     by_name = {d["name"]: d["blooms"] for d in (json.loads(r.entry) for r in rows)}
@@ -789,7 +790,7 @@ def _read_files(
     ``__pos__``) PER SCAN: the hidden ``_metadata`` struct resolves
     only against a file relation, not through the union."""
     if not rel_paths:
-        df = spark.createDataFrame([], schema)
+        df = local_frame(spark, [], schema)
         if with_position:  # no file relation -> no _metadata to read
             df = df.select(
                 "*",
@@ -989,9 +990,7 @@ def _read_with_lineage(
         for e in entries
         if not e.get("lineage")
     ]
-    fri = spark.createDataFrame(
-        computed, "__file__ STRING, __fri__ BIGINT"
-    )
+    fri = local_frame(spark, computed, "__file__ STRING, __fri__ BIGINT")
     return (
         df.join(F.broadcast(fri), "__file__", "left")
         .withColumn(
@@ -2803,7 +2802,7 @@ def read_snapshot(
             if with_lineage
             else schema
         )
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     has_dv = _live_dv(manifest) is not None
     eqds = manifest.get("eq_deletes") or []
     need_pos = has_dv or bool(eqds) or with_lineage
@@ -2919,8 +2918,8 @@ def _apply_eq_deletes(
     if not eqds:
         return df
     key, dels = _eq_delete_keys(spark, table, eqds, schema)
-    seq_map = spark.createDataFrame(
-        [(e["path"], int(e.get("seq", 0))) for e in entries],
+    seq_map = local_frame(
+        spark, [(e["path"], int(e.get("seq", 0))) for e in entries],
         "__file__ STRING, __fseq__ BIGINT",
     )
     df = df.join(F.broadcast(seq_map), "__file__", "left")
@@ -3082,8 +3081,8 @@ def compact_eq_deletes(spark: SparkSession, table: str) -> int | None:
         spark, table, entries, schema, with_position=True,
         column_ids=cids,
     )
-    seq_map = spark.createDataFrame(
-        [(e["path"], int(e.get("seq", 0))) for e in entries],
+    seq_map = local_frame(
+        spark, [(e["path"], int(e.get("seq", 0))) for e in entries],
         "__file__ STRING, __fseq__ BIGINT",
     )
     rows = rows.join(F.broadcast(seq_map), "__file__", "left")
@@ -3155,8 +3154,8 @@ def snapshot_history(spark: SparkSession, table: str) -> DataFrame:
             )
         )
     # n_rows is PHYSICAL; logical = n_rows - dv_rows (live DV deletes)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "snapshot INT, parent INT, mode STRING, n_files INT, "
         "n_rows BIGINT, n_bytes BIGINT, dv_rows BIGINT, "
         "committed_at_ms BIGINT",
@@ -3192,8 +3191,8 @@ def table_files(
         )
         for e in m["files"]
     ]
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "path STRING, n_rows BIGINT, n_bytes BIGINT, seq BIGINT, "
         "partition MAP<STRING,STRING>, first_row_id BIGINT, "
         "lineage_materialized BOOLEAN, stats_columns ARRAY<STRING>",
@@ -3224,8 +3223,8 @@ def table_partitions(
         (dict(k) or None, a[0], a[1], a[2])
         for k, a in sorted(agg.items())
     ]
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "partition MAP<STRING,STRING>, n_files BIGINT, n_rows BIGINT, "
         "n_bytes BIGINT",
     )
@@ -3346,7 +3345,7 @@ def manifest_agg(
                 f"{name} {schema[col].dataType.simpleString()}"
             )
     fields.append("_served_from STRING")
-    return spark.createDataFrame([row], ", ".join(fields))
+    return local_frame(spark, [row], ", ".join(fields))
 
 
 _TAGS_DIR = "_tags"
@@ -5185,7 +5184,8 @@ def table_changes(
     eq_shared: set[str] = set()
     if new_eq and shared:
         key, dels = _eq_delete_keys(spark, table, new_eq, schema)
-        seq_map = spark.createDataFrame(
+        seq_map = local_frame(
+            spark,
             [(p, int(ent_by_path[p].get("seq", 0))) for p in shared],
             "__file__ STRING, __fseq__ BIGINT",
         )

@@ -31,11 +31,13 @@ from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from small_etl_spark.functions.templating import (
     substitute_endpoint_params,
     substitute_template,
 )
+from small_etl_spark.session import local_frame
 
 
 class HttpFetchError(RuntimeError):
@@ -108,7 +110,7 @@ def records_to_df(spark: SparkSession, records: list[dict[str, Any]]) -> DataFra
     heterogeneous keys / nested objects like the reference's schemaless
     rows)."""
     if not records:
-        return spark.createDataFrame([], "dummy string").limit(0).drop("dummy")
+        return local_frame(spark, [], StructType())
     jsonl = [json.dumps(r) for r in records]
     return spark.read.json(spark.sparkContext.parallelize(jsonl, 1))
 

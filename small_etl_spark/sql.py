@@ -132,6 +132,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from small_etl_spark.session import local_frame
 from small_etl_spark.sinks import versioned as V
 
 
@@ -417,8 +418,8 @@ def _prune_preds(where_sql: str | None) -> "list[V.Predicate] | None":
 def _dml_result(
     spark: SparkSession, op: str, table: str, version: int | None
 ) -> DataFrame:
-    return spark.createDataFrame(
-        [(op, table, -1 if version is None else int(version))],
+    return local_frame(
+        spark, [(op, table, -1 if version is None else int(version))],
         "op string, table string, version bigint",
     )
 
@@ -525,8 +526,8 @@ def _dml(
                         int(m.get("committed_at_ms", 0)),
                     )
                 )
-            return spark.createDataFrame(
-                rows,
+            return local_frame(
+                spark, rows,
                 "catalog_version BIGINT, n_tables BIGINT, "
                 "committed_at_ms BIGINT",
             )
@@ -554,8 +555,8 @@ def _dml(
                     else V.latest_version(tables[n])
                 )
                 rows.append((n, -1 if v is None else int(v)))
-            return spark.createDataFrame(
-                rows, "table string, version bigint"
+            return local_frame(
+                spark, rows, "table string, version bigint"
             )
         hm = re.match(
             r"\s*SHOW\s+(BRANCHES|TAGS)\s+(\w+)\s*$",
@@ -564,7 +565,8 @@ def _dml(
         if hm:
             root = _target_root(hm.group(2), tables)
             if hm.group(1).upper() == "BRANCHES":
-                return spark.createDataFrame(
+                return local_frame(
+                    spark,
                     [
                         (n, int(info["base"]), int(info["head"]))
                         for n, info in sorted(
@@ -573,7 +575,8 @@ def _dml(
                     ],
                     "branch string, base bigint, head bigint",
                 )
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 [
                     (n, int(v))
                     for n, v in sorted(V.list_tags(root).items())
@@ -1108,8 +1111,8 @@ def _dml_vacuum(
     # keep-last-N) is the contract streaming tables need.
     ms = int(hours or 24 * 7) * 3600 * 1000
     n = V.expire_snapshots(root, older_than_ms=ms)
-    out = spark.createDataFrame(
-        [("vacuum", name, int(n))],
+    out = local_frame(
+        spark, [("vacuum", name, int(n))],
         "op string, table string, files_deleted bigint",
     )
     return out
@@ -1413,7 +1416,7 @@ def _ddl_create(
     if like_schema is not None:
         # the LIKE regex is end-anchored, so no column list /
         # PARTITIONED BY / AS SELECT can coexist with it
-        df = spark.createDataFrame([], like_schema)
+        df = local_frame(spark, [], like_schema)
         partition_by = like_partition or None
     elif am:
         if schema_text is not None:
@@ -1434,7 +1437,7 @@ def _ddl_create(
             raise ValueError(
                 f"trailing text after CREATE TABLE: {query[pos:].strip()!r}"
             )
-        df = spark.createDataFrame([], schema_text)
+        df = local_frame(spark, [], schema_text)
     v = V.commit_snapshot(
         df, root, mode="overwrite", partition_by=partition_by
     )
@@ -1755,8 +1758,8 @@ def _sql_txn_block(
     except Exception:
         txn.abort()
         raise
-    return spark.createDataFrame(
-        rows, "op string, target string, seq bigint"
+    return local_frame(
+        spark, rows, "op string, target string, seq bigint"
     )
 
 
@@ -1771,7 +1774,8 @@ def _describe_detail(
         raise FileNotFoundError(f"no snapshots committed at {root!r}")
     m = V.read_manifest(root, head)
     schema = StructType.fromJson(m["schema"])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 name,
@@ -1816,6 +1820,6 @@ def _show_create_table(
         lines.append(
             f"ALTER TABLE {name} ADD CONSTRAINT {cname} CHECK ({expr})"
         )
-    return spark.createDataFrame(
-        [("\n".join(lines),)], "create_statement string"
+    return local_frame(
+        spark, [("\n".join(lines),)], "create_statement string"
     )

@@ -191,3 +191,18 @@ def test_expr_build_rows_identical_to_column_form(spark, curated):
     assert out.exceptAll(column_form).count() == 0
     assert column_form.exceptAll(out).count() == 0
     assert out.count() == column_form.count()
+
+
+def test_parser_escaping_rechecked_on_every_call(spark, curated):
+    """The parser mode is a runtime conf: flipping it after a
+    successful call (the fixture's) makes the next call raise instead
+    of silently re-reading the regex literals."""
+    docs, _ = curated
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, "true")
+    try:
+        with pytest.raises(RuntimeError, match="escapedStringLiterals"):
+            curate_corpus(docs)
+    finally:
+        spark.conf.unset(key)
+    curate_corpus(docs)  # default mode again: accepted
